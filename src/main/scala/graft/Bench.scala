@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times the headline query set on SPARK_GRAFT_SF_DIR
@@ -208,22 +207,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // volume-derived (== cpus at sf0.1; grows with the input so a
-    // bigger SF never hash-aggregates through under-sized shuffles)
-    val parts = GraftSession.shufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      // scale-adaptive AQE coalesce floor (see GraftSession scaladoc):
-      // inert at production partition sizes, keeps small post-shuffle
-      // stages on all cores instead of 1-2 tasks
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        GraftSession.aqeMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, sfDir)
+      .appName("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val qs = SparkEntry.headline
@@ -302,18 +287,9 @@ object Bench {
       q.name -> math.min(kept.p1.times(q.name), kept.p2.times(q.name))
     }
 
-    val qJson = results
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    def errMapJson(m: Map[String, String]): String = m
-      .map { case (k, v) => jstr(k) + ":" + jstr(v.take(300)) }
-      .mkString("{", ",", "}")
+    val qJson = Json.obj(results.map { case (k, v) => k -> f"$v%.3f" })
+    def errMapJson(m: Map[String, String]): String =
+      Json.obj(m.map { case (k, v) => k -> Json.str(v.take(300)) })
     // the artifact's top-level errors (and the exit code) reflect the
     // KEPT sweep only; every sweep still carries its own errors below
     val errJson = errMapJson(kept.errors)

@@ -1,6 +1,11 @@
 package graft
 
-/** Volume-aware session sizing — the "no manual knob" closure of the
+import org.apache.spark.sql.SparkSession
+
+/** The one place a local engine session is configured, plus the
+  * volume-aware sizing it applies.
+  *
+  * Volume-aware session sizing — the "no manual knob" closure of the
   * round-9 100× probe finding: `spark.sql.shuffle.partitions` pinned
   * at core count is right for sf0.1 but super-linear at 100× (the
   * q_yelp_master_volume 178× blow-up was fully root-caused to 1.2 B
@@ -17,13 +22,27 @@ package graft
   * executor-memory budget; here the input dir IS the scan set, so
   * its on-disk footprint is the estimate (compressed parquet, the
   * same thing Spark's own `files.maxPartitionBytes` reasons about).
-  *
-  * `SPARK_GRAFT_SHUFFLE_PARTITIONS` remains an explicit override for
-  * probes that want to measure a pinned value; when unset, every
-  * entrypoint (Bench/Verify/QBench/HostileVerify) derives the value
-  * from the data it is about to read.
   */
 object GraftSession {
+
+  /** The shared engine config for a `local[cpus]` session about to read
+    * `sfDir`: volume-derived shuffle partitions, AQE on with the
+    * [[aqeMinPartitionSize]] coalesce floor, UTC session timezone, UI
+    * off. `Bench`, `Verify`, the tools and the test session all build
+    * from this; a caller adds only what differs for it. */
+  def settings(cpus: Int, sfDir: String): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> shufflePartitions(sfDir, cpus).toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+      aqeMinPartitionSize,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** A session builder carrying [[settings]]; callers chain their own
+    * `appName` and overrides, then `getOrCreate()`. */
+  def local(cpus: Int, sfDir: String): SparkSession.Builder =
+    SparkSession.builder().config(settings(cpus, sfDir))
 
   /** Compressed-input bytes that one shuffle partition absorbs while
     * keeping per-partition hash/sort state in memory — measured, see
@@ -51,13 +70,11 @@ object GraftSession {
       math.max(cpus.toLong, inputBytes / BytesPerShufflePartition)).toInt
 
   /** Shuffle-partition count for a session about to read `sfDir`:
-    * the env override if set, else [[derive]] of the dir's footprint.
-    * At sf0.1 (17.5 MB) this stays at the core count — the pinned
-    * official-bench config — and at the 100× probe (1.61 GB) it
-    * derives ~255 with no knob. */
+    * [[derive]] of the dir's footprint. At sf0.1 (17.5 MB) this stays
+    * at the core count — the pinned official-bench config — and at the
+    * 100× probe (1.61 GB) it derives ~255 with no knob. */
   def shufflePartitions(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
-      .getOrElse(derive(dirBytes(sfDir), cpus))
+    derive(dirBytes(sfDir), cpus)
 
   /** AQE post-shuffle coalesce floor (r18, guide §2 "make partitioning
     * scale-adaptive"). With the default `parallelismFirst=true` AQE
@@ -73,7 +90,7 @@ object GraftSession {
     * (`parallelismFirst=false` — coalescing to the 64 MB advisory size
     * — was measured 2–4× WORSE here: it serializes compute-bound
     * post-shuffle stages exactly as the parallelismFirst scaladoc
-    * warns.) Env-overridable for controlled probes.
+    * warns.)
     *
     * The default is 256k, picked by a three-way FULL-BENCH comparison
     * (r18, same code, quiet windows): in-sequence totals 1m = 35.10,
@@ -82,6 +99,5 @@ object GraftSession {
     * many-tiny-stage queries (isolated q_dedup_minhash_lsh 1.01 →
     * 2.06 s at 64k!), 1m serializes the compute-bound reduce stages;
     * 256k holds both ends (OPTIMIZATION_r18.md has the full table). */
-  def aqeMinPartitionSize: String =
-    sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "256k")
+  val aqeMinPartitionSize: String = "256k"
 }

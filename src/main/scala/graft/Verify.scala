@@ -11,55 +11,49 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.GraftSession.aqeMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt, sfDir)
+      .appName("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // Per-query wall time (VERDICT r15 #4): only the 34 headliners are
-    // benched per round, so a wall-time blowup in any of the other ~460
-    // queries is invisible until it stalls the whole verify sweep.
-    // Verify already runs every query at both SFs — stamp the durations
-    // (verify_times.json) so rounds can diff the top deltas.
-    val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        times.put(name, (System.nanoTime() - t0) / 1e9)
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val timesJson = times
-      .map { case (k, v) => s"${q(k)}: " + f"$v%.3f" }
-      .mkString("{\"sf\":" + q(sfDir) + ",\"times\":{", ",", "}}")
-    Files.writeString(Paths.get(s"$outDir/verify_times.json"), timesJson)
+    dump(spark, sfDir, outDir,
+      SparkEntry.catalog.filter(q => only.forall(_.contains(q.name))))
     GraftCaches.release(spark)
     spark.stop()
+  }
+
+  /** Writes each query's result to `outDir/<name>` as parquet, their
+    * oracles to oracle_sql.json, and per-query wall time plus every
+    * failure's message to verify_times.json. A query that throws is
+    * timed to its failure point, logged and listed under "failures" —
+    * never just a missing output directory. Returns the failures.
+    *
+    * Per-query wall time (VERDICT r15 #4): only the 34 headliners are
+    * benched per round, so a wall-time blowup in any of the other ~460
+    * queries is invisible until it stalls the whole verify sweep.
+    * Verify already runs every query at both SFs — stamp the durations
+    * so rounds can diff the top deltas. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           qs: Seq[Q]): Map[String, String] = {
+    new java.io.File(outDir).mkdirs()
+    val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    qs.foreach { case Q(name, run, _, _) =>
+      val t0 = System.nanoTime()
+      try run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        val msg = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+        System.err.println(s"[verify] $name failed: $msg")
+        failures.put(name, msg)
+      }
+      times.put(name, (System.nanoTime() - t0) / 1e9)
+    }
+    val oracles = SparkEntry.oracleSql.filter { case (k, _) => times.contains(k) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.obj(oracles.map { case (k, v) => k -> Json.str(v) }))
+    Files.writeString(Paths.get(s"$outDir/verify_times.json"), Json.obj(Seq(
+      "sf" -> Json.str(sfDir),
+      "times" -> Json.obj(times.map { case (k, v) => k -> f"$v%.3f" }),
+      "failures" -> Json.obj(failures.map { case (k, v) => k -> Json.str(v) }))))
+    failures.toMap
   }
 }

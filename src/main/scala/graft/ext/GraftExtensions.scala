@@ -30,7 +30,7 @@ object UdfRewriteRule extends Rule[LogicalPlan] {
   * registers `super_category` as a SQL function backed by the native
   * expression. Usable two ways:
   *
-  *  - build time: `SparkSession.builder().withExtensions(new GraftExtensions)`
+  *  - build time: `GraftSession.local(cpus, sfDir).withExtensions(new GraftExtensions)`
   *    (or `spark.sql.extensions=graft.ext.GraftExtensions`);
   *  - runtime: `GraftExtensions.install(spark)` for sessions the
   *    driver already created (uses experimental extraOptimizations +

@@ -1,7 +1,7 @@
 package graft.scale
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics as fixed-round dataflow — PageRank over
@@ -141,18 +141,25 @@ object GraphOps {
     * (id parity encodes the side, so the label rebuild is a scan-local
     * expression, not a join). */
   private def pagerank(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val li = Tables.lineitem(s, d)
-      .select($"l_suppkey".as("sk"), $"l_partkey".as("pk")).distinct()
-    val eId = li.select(($"sk" * 2).as("src"), ($"pk" * 2 + 1).as("dst"))
-      .unionAll(li.select(($"pk" * 2 + 1).as("src"), ($"sk" * 2).as("dst")))
-    pagerankOn(eId, Iterations, Some(s"graph.pr_id:$d"))
-      .select(
-        when($"node" % 2 === 0, concat(lit("s"), expr("node div 2")))
-          .otherwise(concat(lit("p"), expr("(node - 1) div 2")))
-          .as("node"),
-        $"rank_fp", $"rank")
+      .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk")).distinct()
+    pagerankOn(idEdges(li), Iterations, Some(s"graph.pr_id:$d"))
+      .select(idLabel(col("node")).as("node"), col("rank_fp"), col("rank"))
   }
+
+  /** Both directions of the (sk, pk) supplier↔part edges on long ids:
+    * supplier 2·sk (even), part 2·pk+1 (odd). Keys are widened to long
+    * BEFORE doubling, so int32 keys above 2³⁰ cannot wrap. */
+  private[scale] def idEdges(li: DataFrame): DataFrame = {
+    val s = col("sk").cast("long") * 2
+    val p = col("pk").cast("long") * 2 + 1
+    li.select(s.as("src"), p.as("dst")).unionAll(li.select(p.as("src"), s.as("dst")))
+  }
+
+  /** The public "s<k>"/"p<k>" label of an [[idEdges]] node id: parity
+    * picks the side, the arithmetic shift recovers k (floor(id / 2)). */
+  private[scale] def idLabel(node: Column): Column =
+    concat(when(node % 2 === 0, lit("s")).otherwise(lit("p")), shiftright(node, 1))
 
   /** Unrolled DuckDB replay of [[pagerank]] — same fixed-point units,
     * same integer divisions, k chained CTEs. */

@@ -40,8 +40,69 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("shufflePartitions of the real sf0.1 dir keeps the pinned " +
       "bench config at 32 cpus") {
-    assume(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").isEmpty)
     assert(GraftSession.shufflePartitions("/root/testdata/sf0.1", 32)
       === 32)
+  }
+
+  /** A scale-factor dir next to the test session's sf0.001. */
+  private def sfDir(name: String): String =
+    new java.io.File(SparkTestSession.sf).toPath.resolveSibling(name).toString
+
+  /** The config every entrypoint built by hand before the factory
+    * existed: Bench at sf0.1 on 32 cores, Verify at sf0.01 on 4. */
+  private def handBuilt(cpus: Int) = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  test("factory settings equal the Bench and Verify configs") {
+    assert(GraftSession.settings(32, sfDir("sf0.1")) === handBuilt(32))
+    assert(GraftSession.settings(4, sfDir("sf0.01")) === handBuilt(4))
+  }
+
+  test("the test session is built by the factory") {
+    val spark = SparkTestSession.spark
+    GraftSession.settings(4, SparkTestSession.sf).foreach { case (k, v) =>
+      assert(spark.conf.get(k) === v, k)
+    }
+  }
+
+  /** Runs `body` with `kv` set in this JVM's environment map (what
+    * `sys.env` reads), restoring the previous values afterwards. */
+  private def withEnv[T](kv: (String, String)*)(body: => T): T = {
+    val env = System.getenv()
+    val field = env.getClass.getDeclaredField("m")
+    field.setAccessible(true)
+    val m = field.get(env).asInstanceOf[java.util.Map[String, String]]
+    val prev = kv.map { case (k, _) => k -> Option(m.get(k)) }
+    kv.foreach { case (k, v) => m.put(k, v) }
+    try body
+    finally prev.foreach { case (k, p) => p.fold(m.remove(k))(m.put(k, _)) }
+  }
+
+  test("the retired env overrides change nothing") {
+    withEnv("SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "7",
+        "SPARK_GRAFT_AQE_MIN_PARTITION" -> "1m") {
+      assert(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") === Some("7"))
+      assert(GraftSession.shufflePartitions(sfDir("sf0.1"), 32) === 32)
+      assert(GraftSession.aqeMinPartitionSize === "256k")
+      assert(GraftSession.settings(32, sfDir("sf0.1")) === handBuilt(32))
+    }
+  }
+
+  test("GraftSession.scala holds the only SparkSession.builder( in src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val needle = java.util.regex.Pattern.quote("SparkSession.builder(")
+    val sites = Files.walk(Paths.get("src/main/scala")).iterator.asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val n = Files.readString(p).split(needle, -1).length - 1
+        Seq.fill(n)(p.getFileName.toString)
+      }
+    assert(sites === Seq("GraftSession.scala"))
   }
 }

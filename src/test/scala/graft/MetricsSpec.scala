@@ -26,7 +26,7 @@ class MetricsSpec extends AnyFunSuite {
     * combine emits at most |groups| partial rows PER TASK, so the
     * environment-independent bound is groups × tasks, not a hard
     * absolute (which broke under legitimate partition-count changes —
-    * the SPARK_GRAFT_SHUFFLE_PARTITIONS lever, larger test SFs). */
+    * volume-derived partition counts, larger test SFs). */
   private def shuffleOf(action: => Unit): (Long, Long, Long) = {
     val recs = new java.util.concurrent.atomic.AtomicLong(0)
     val bytes = new java.util.concurrent.atomic.AtomicLong(0)

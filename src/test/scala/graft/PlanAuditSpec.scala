@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the global windows whose frame is bounded by construction,
   * each with its cardinality argument; Cross-typed BNLJ with a 1-row
   * broadcast side is the standard broadcast-scalar pattern and is
-  * allowed everywhere. Discovery tooling: graft.tools.WindowCensus.
+  * allowed everywhere. Discovery tooling: `graft.tools.Probe windows`.
   */
 class PlanAuditSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}

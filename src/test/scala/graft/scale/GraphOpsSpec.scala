@@ -24,6 +24,28 @@ class GraphOpsSpec extends AnyFunSuite {
     rows.foreach(r => assert(r.getAs[Long]("rank_fp") > 0L))
   }
 
+  test("pagerank long ids are width-independent: int32 keys near 2^30 " +
+      "stay positive, keep their parity and map back to their labels") {
+    import spark.implicits._
+    val keys = Seq((1 << 30) - 1, 1 << 30, (1 << 30) + 12345, Int.MaxValue)
+    val pairs = keys.zip(keys.reverse)
+    val li = pairs.toDF("sk", "pk")
+    assert(li.schema.map(_.dataType.typeName) === Seq("integer", "integer"))
+    val rows = GraphOps.idEdges(li)
+      .select($"src", $"dst", GraphOps.idLabel($"src"), GraphOps.idLabel($"dst"))
+      .collect()
+    rows.foreach { r =>
+      val (src, dst) = (r.getLong(0), r.getLong(1))
+      assert(src > 0 && dst > 0, s"wrapped id in $r")
+      assert(r.getString(2).startsWith(if (src % 2 == 0) "s" else "p"), s"$r")
+      assert(r.getString(3).startsWith(if (dst % 2 == 0) "s" else "p"), s"$r")
+    }
+    val expected = pairs.flatMap { case (sk, pk) =>
+      Seq((s"s$sk", s"p$pk"), (s"p$pk", s"s$sk")) }
+    assert(rows.map(r => (r.getString(2), r.getString(3))).sorted ===
+      expected.sorted)
+  }
+
   test("pagerankOn API: the hub of a star graph outranks every leaf") {
     import SparkTestSession.spark.implicits._
     // undirected star: hub <-> leaf1..leaf6 (both directions)
